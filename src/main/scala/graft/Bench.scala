@@ -120,6 +120,12 @@ object Bench {
     // they now measure the work.)
     def runFully(df: org.apache.spark.sql.DataFrame): Long =
       df.queryExecution.toRdd.count()
+    // Every failed execution, with its cause: (query, phase, exception).
+    // The timings only say -1; this says why.
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[(String, String, Throwable)]()
+    def attempt(name: String, phase: String)(f: => Unit): Boolean =
+      try { f; true }
+      catch { case t: Throwable => failures.add((name, phase, t)); false }
     // Between serial queries, drop persistent blocks the finished query left
     // behind (localCheckpoint materializations persist their RDD and only
     // free on GC — across ~120 queries they accumulate into executor-memory
@@ -140,8 +146,7 @@ object Bench {
     val canaryName = "q01_pricing_summary"
     def timeCanary(): Double = {
       val t0 = System.nanoTime()
-      val ok = try { runFully(SparkEntry.queries(canaryName)(spark, sfDir)); true }
-        catch { case _: Throwable => false }
+      val ok = attempt(canaryName, "canary")(runFully(SparkEntry.queries(canaryName)(spark, sfDir)))
       val sec = (System.nanoTime() - t0) / 1e9
       dropStrayBlocks()
       if (ok) sec else -1.0
@@ -150,8 +155,7 @@ object Bench {
 
     val results = selected.map { case (name, fn) =>
       val t0 = System.nanoTime()
-      val ok = try { runFully(fn(spark, sfDir)); true }
-        catch { case _: Throwable => false }
+      val ok = attempt(name, "serial")(runFully(fn(spark, sfDir)))
       // failures really do report -1 (not their time-to-crash: a 30s OOM
       // must not masquerade as a valid 30s measurement in the artifact)
       val sec = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
@@ -172,7 +176,7 @@ object Bench {
       val futures = selected.map { case (name, fn) =>
         scala.concurrent.Future {
           spark.sparkContext.setLocalProperty("spark.scheduler.pool", name)
-          try runFully(fn(spark, sfDir)) catch { case _: Throwable => -1L }
+          attempt(name, "parallel")(runFully(fn(spark, sfDir)))
         }
       }
       scala.concurrent.Await.result(
@@ -225,8 +229,7 @@ object Bench {
         val t0 = System.nanoTime()
         // a FAILED rerun must not produce a bogus fast time for min() to
         // pick — only successful re-executions count
-        val ok = try { runFully(SparkEntry.queries(name)(spark, sfDir)); true }
-          catch { case _: Throwable => false }
+        val ok = attempt(name, "retime")(runFully(SparkEntry.queries(name)(spark, sfDir)))
         val sec = (System.nanoTime() - t0) / 1e9
         dropStrayBlocks()
         if (ok) Some(name -> sec) else None
@@ -300,20 +303,15 @@ object Bench {
       p.waitFor(); if (out.matches("[0-9a-f]{6,40}")) Some(out) else None
     }.toOption.flatten).getOrElse("unknown")
 
-    val json = s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,"retimed":$rt,"retime_unreliable":$unrel,"failed":$failed,"wall_parallel_sec":${r3(wallParallel)},"canary":{"first":${r3(canaryFirst)},"last":${r3(canaryLast)},"ratio":${r3(canaryRatio)},"vs_ref":${r3(canaryVsRef)}},"contended":$contended,"over_ref_2x_n":${overRefNames.size},"over_ref_2x":$overRefFinal,"commit":"$commit","sf":"$sfDir"}"""
+    // one entry per failed execution: query, phase, exception class and the
+    // first line of its message (bounded, so the record stays one line)
+    val errors = failures.toArray(Array.empty[(String, String, Throwable)]).map { case (name, phase, t) =>
+      val msg = Option(t.getMessage).flatMap(_.linesIterator.nextOption()).getOrElse("").take(200)
+      Seq("query" -> short(name), "phase" -> phase, "class" -> t.getClass.getName, "message" -> msg)
+        .map { case (k, v) => s""""$k":${Verify.escapeJson(v)}""" }.mkString("{", ",", "}")
+    }.mkString("[", ",", "]")
+    val json = s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,"retimed":$rt,"retime_unreliable":$unrel,"failed":$failed,"errors":$errors,"wall_parallel_sec":${r3(wallParallel)},"canary":{"first":${r3(canaryFirst)},"last":${r3(canaryLast)},"ratio":${r3(canaryRatio)},"vs_ref":${r3(canaryVsRef)}},"contended":$contended,"over_ref_2x_n":${overRefNames.size},"over_ref_2x":$overRefFinal,"commit":"$commit","sf":"$sfDir"}"""
     println(json)
-    // Guaranteed-short headline line, printed LAST (round-14 verdict item 2):
-    // the full line above is ~3KB with 161 queries plus retime pairs, and a
-    // bounded stdout-tail capture window can truncate it mid-map (that is how
-    // the r13 artifact became unparseable and the r14 round-over-round
-    // comparison went blind). This line carries the verdict-critical scalars
-    // in <1KB so ANY tail window ends on a complete, parseable record. It
-    // deliberately does NOT contain the substring "metric": consumers that
-    // `grep '"metric"' | tail -1` (tools/finalize_round.sh, and the driver's
-    // own extraction as far as the artifacts show) must keep selecting the
-    // full per-query line above, which also still lands verbatim in
-    // tools/last_bench_<sf>.json below.
-    println(s"""{"bench_headline":1,"total_sec":${r3(total)},"n_queries":${finalTimes.size},"failed":$failed,"wall_parallel_sec":${r3(wallParallel)},"canary":{"first":${r3(canaryFirst)},"last":${r3(canaryLast)},"ratio":${r3(canaryRatio)},"vs_ref":${r3(canaryVsRef)}},"contended":$contended,"over_ref_2x_n":${overRefNames.size},"over_ref_2x":$overRefFinal,"commit":"$commit","sf":"$sfDir"}""")
     // the SAME line to a file (round-12 verdict item 8): the driver's 2KB
     // stdout tail truncates the per-query map, so downstream consumers
     // (finalize script, judge) read the full artifact from here. Name keyed

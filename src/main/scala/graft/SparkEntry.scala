@@ -125,8 +125,20 @@ object SparkEntry {
   private val mediaFrameCache =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
+  /** `spark.graft.media.decodeTargetBytes`: parquet bytes of payload per
+    * decode task, default 4 MiB. Anything but a positive whole number fails
+    * with a message naming the key. */
+  private[graft] def decodeTargetBytes(s: SparkSession): Long = {
+    val key = "spark.graft.media.decodeTargetBytes"
+    val raw = s.conf.get(key, (4L << 20).toString)
+    raw.trim.toLongOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+      s"$key must be a positive number of bytes, got '$raw'"))
+  }
+
   private def mediaFrame(s: SparkSession, dir: String, kind: String)(
       build: => DataFrame): DataFrame = {
+    // a bad knob fails here, before any payload is synthesized
+    val targetBytes = decodeTargetBytes(s)
     val path = mediaFrameCache.computeIfAbsent(kind + ":" + dir, _ => {
       val p = scratchDir(s"graft-media-$kind")
       build.write.mode("overwrite").parquet(p + "/frame")
@@ -137,7 +149,8 @@ object SparkEntry {
     // the blanket repartition(defaultParallelism) over-split this payload
     // count and the extra concurrent decoders only contend on allocation).
     // Partition count = on-disk frame bytes / decodeTargetBytes, read from
-    // driver-side file metadata (no extra scan in the timed region) — the
+    // file metadata through the Hadoop FileSystem of the frame path (no
+    // extra scan in the timed region, any scratch filesystem) — the
     // same rule that sizes Multimodal.repartitionForDecode yields thousands
     // of right-sized decode tasks on a 100 TB corpus and a handful here.
     // Parameterised, not pinned: spark.graft.media.decodeTargetBytes
@@ -146,14 +159,9 @@ object SparkEntry {
     // flat between 2–8 MiB and every kind beats both repartition(32) and
     // repartition(8); production codecs with higher per-byte decode cost
     // lower it, I/O-bound codecs raise it toward the 128 MiB scan default).
-    val frameBytes = {
-      val d = new java.io.File(path + "/frame")
-      Option(d.listFiles)
-        .map(_.filter(_.getName.endsWith(".parquet")).map(_.length).sum)
-        .getOrElse(0L)
-    }
-    val targetBytes = s.conf.get("spark.graft.media.decodeTargetBytes",
-      (4L << 20).toString).toLong
+    val frame = new org.apache.hadoop.fs.Path(path + "/frame")
+    val frameBytes = frame.getFileSystem(s.sparkContext.hadoopConfiguration).listStatus(frame)
+      .filter(_.getPath.getName.endsWith(".parquet")).map(_.getLen).sum
     val parts = math.max(1, math.ceil(frameBytes.toDouble / targetBytes).toInt)
     if (sys.env.contains("SPARK_GRAFT_DEBUG"))
       System.err.println(s"[media] $kind frameBytes=$frameBytes parts=$parts")
@@ -166,10 +174,10 @@ object SparkEntry {
     mediaPayloads.values.foreach(_(s, dir).queryExecution.toRdd.count(): Unit)
 
   /** The six synthesized payload frames (deterministic given sfDir), one
-    * per media gate query. Each returns (doc_id, content[, …]) already
-    * spread across defaultParallelism partitions, reading from the per-JVM
-    * parquet materialization so the encode side never lands in a timed
-    * region. */
+    * per media gate query. Each returns (doc_id, content[, …]) read from the
+    * per-JVM parquet materialization, so the encode side never lands in a
+    * timed region, and partitioned by payload volume: on-disk frame bytes /
+    * `spark.graft.media.decodeTargetBytes` (see [[mediaFrame]]). */
   private lazy val mediaPayloads: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q150" -> ((s, dir) => mediaFrame(s, dir, "q150") {
       import graft.operators.Multimodal

@@ -1,30 +1,72 @@
 package graft.dataflow
 
 import scala.annotation.tailrec
-import scala.util.{Failure, Success, Try}
+import scala.collection.immutable.TreeMap
+import scala.util.{Success, Try}
+
+/** The pending actions of a flow in flow order, indexed by guid and by
+  * output label. Appending, removing and replacing an action each cost
+  * O(log n), so neither building nor executing a flow rescans it. */
+final class PendingActions[C <: FlowContext] private (
+    bySlot: TreeMap[Int, FlowAction[C]],
+    slotOf: Map[String, Int],
+    producers: Map[String, FlowAction[C]]) {
+
+  def isEmpty: Boolean = bySlot.isEmpty
+  def size: Int = bySlot.size
+  def iterator: Iterator[FlowAction[C]] = bySlot.valuesIterator
+  def toVector: Vector[FlowAction[C]] = iterator.toVector
+  def contains(guid: String): Boolean = slotOf.contains(guid)
+
+  /** The pending action that produces `label`. */
+  def producerOf(label: String): Option[FlowAction[C]] = producers.get(label)
+
+  def :+(action: FlowAction[C]): PendingActions[C] = {
+    val slot = if (bySlot.isEmpty) 0 else bySlot.lastKey + 1
+    new PendingActions(bySlot.updated(slot, action), slotOf.updated(action.guid, slot),
+      producers ++ action.outputLabels.map(_ -> action))
+  }
+
+  def -(guid: String): PendingActions[C] = slotOf.get(guid).fold(this) { slot =>
+    new PendingActions(bySlot - slot, slotOf - guid, producers -- bySlot(slot).outputLabels)
+  }
+
+  /** `replacement` takes the flow position of the action with `guid`. */
+  def replace(guid: String, replacement: FlowAction[C]): PendingActions[C] = {
+    val slot = slotOf(guid)
+    new PendingActions(bySlot.updated(slot, replacement),
+      (slotOf - guid).updated(replacement.guid, slot),
+      producers -- bySlot(slot).outputLabels ++ replacement.outputLabels.map(_ -> replacement))
+  }
+
+  def ++(other: PendingActions[C]): PendingActions[C] = other.iterator.foldLeft(this)(_ :+ _)
+}
+
+object PendingActions {
+  def empty[C <: FlowContext]: PendingActions[C] =
+    new PendingActions[C](TreeMap.empty, Map.empty, Map.empty)
+}
 
 /** Immutable DAG of named actions over labelled entities.
   *
   * Semantics follow the reference flow state machine
   * (/root/reference/waimak-core/src/main/scala/com/coxautodata/waimak/dataflow/DataFlow.scala:25-513):
-  * executed actions leave `actions` and their outputs join `inputs`; tags add
+  * executed actions leave `pending` and their outputs join `inputs`; tags add
   * control-edges; validation rejects duplicate outputs, unresolvable inputs
   * and label/tag cycles. Encoding is fresh: a single generic state record +
   * an F-bounded trait so concrete flows (Spark) can hook `onExecuted`.
   */
 final case class FlowState[C <: FlowContext](
     inputs: FlowEntities,
-    actions: Seq[FlowAction[C]],
+    pending: PendingActions[C],
     tagState: TagState,
     schedulingMeta: SchedulingMeta,
-    executedActions: Seq[FlowAction[C]]) {
-
-  def pendingGuids: Set[String] = actions.map(_.guid).toSet
-}
+    executedActions: Vector[FlowAction[C]])
 
 object FlowState {
   def empty[C <: FlowContext]: FlowState[C] =
-    FlowState(FlowEntities.empty, Seq.empty, TagState.empty, SchedulingMeta.empty, Seq.empty)
+    FlowState(FlowEntities.empty, PendingActions.empty, TagState.empty, SchedulingMeta.empty,
+      Vector.empty)
 }
 
 trait DataFlow[Self <: DataFlow[Self, C], C <: FlowContext] { self: Self =>
@@ -40,21 +82,21 @@ trait DataFlow[Self <: DataFlow[Self, C], C <: FlowContext] { self: Self =>
   protected def withExtensions(e: Map[String, FlowExtension[Self, C]]): Self
 
   def inputs: FlowEntities = state.inputs
-  def actions: Seq[FlowAction[C]] = state.actions
+  /** Pending actions in flow order. */
+  def actions: Seq[FlowAction[C]] = state.pending.toVector
 
   // ------------------------------------------------------------- building ---
 
   def addAction[A <: FlowAction[C]](action: A): Self = {
     require(action.outputLabels.nonEmpty || action.inputLabels.nonEmpty,
       s"Action [${action.actionName}] must have at least one input or output label")
-    val known = state.actions.flatMap(_.outputLabels).toSet ++ state.inputs.labels
     action.outputLabels.foreach { l =>
       if (l.isEmpty) throw new FlowException(s"Action [${action.actionName}] has an empty output label")
-      if (known.contains(l))
+      if (state.inputs.contains(l) || state.pending.producerOf(l).isDefined)
         throw new FlowException(s"Output label [$l] is already defined in the flow")
     }
     withState(state.copy(
-      actions = state.actions :+ action,
+      pending = state.pending :+ action,
       tagState = state.tagState.register(action.guid),
       schedulingMeta = state.schedulingMeta.register(action.guid)))
   }
@@ -123,19 +165,18 @@ trait DataFlow[Self <: DataFlow[Self, C], C <: FlowContext] { self: Self =>
   /** Replace the action producing `outputLabel` with `wrap(original)`.
     * The wrapper inherits the original's tag metadata via its guid. */
   def interceptPostOutput(outputLabel: String)(wrap: FlowAction[C] => FlowAction[C]): Self = {
-    val target = state.actions.find(_.outputLabels.contains(outputLabel)).getOrElse(
+    val target = state.pending.producerOf(outputLabel).getOrElse(
       throw new FlowException(s"No action produces label [$outputLabel]; cannot intercept"))
     replaceAction(target, wrap(target))
   }
 
   def replaceAction(original: FlowAction[C], replacement: FlowAction[C]): Self = {
-    val idx = state.actions.indexWhere(_.guid == original.guid)
-    if (idx < 0) throw new FlowException(
+    if (!state.pending.contains(original.guid)) throw new FlowException(
       s"Action [${original.actionName}/${original.guid}] not found in the flow")
     val meta = state.tagState.forAction(original.guid)
     val sched = state.schedulingMeta.actionStates.get(original.guid)
     withState(state.copy(
-      actions = state.actions.updated(idx, replacement),
+      pending = state.pending.replace(original.guid, replacement),
       tagState = state.tagState.copy(
         perAction = state.tagState.perAction - original.guid + (replacement.guid -> meta)),
       schedulingMeta = state.schedulingMeta.copy(
@@ -155,7 +196,7 @@ trait DataFlow[Self <: DataFlow[Self, C], C <: FlowContext] { self: Self =>
     val newInputs = action.outputLabels.zip(outputs)
       .foldLeft(state.inputs) { case (acc, (l, v)) => acc.add(l, v) }
     val next = withState(state.copy(
-      actions = state.actions.filterNot(_.guid == action.guid),
+      pending = state.pending - action.guid,
       inputs = newInputs,
       executedActions = state.executedActions :+ action))
     next.onExecuted(action, outputs)
@@ -164,24 +205,12 @@ trait DataFlow[Self <: DataFlow[Self, C], C <: FlowContext] { self: Self =>
   /** Hook for concrete flows (e.g. temp-view registration). */
   protected def onExecuted(action: FlowAction[C], outputs: core.ActionResult): Self = self
 
-  /** Guids of actions whose tag dependencies are fully satisfied: no pending
-    * action carries a tag this action depends on. */
-  private def tagDepsSatisfied(action: FlowAction[C]): Boolean = {
-    val deps = state.tagState.forAction(action.guid).dependsOnTags
-    deps.isEmpty || !state.actions.exists { other =>
-      other.guid != action.guid &&
-        state.tagState.forAction(other.guid).tags.intersect(deps).nonEmpty
-    }
-  }
-
-  /** Actions ready to run now, restricted to `availablePools` (all pools when
-    * empty). */
+  /** Actions ready to run now, in flow order, restricted to `availablePools`
+    * (all pools when empty). Builds a [[ReadyIndex]] over the current state;
+    * executors keep one index for the whole run instead. */
   def nextRunnable(availablePools: Set[String] = Set.empty): Seq[FlowAction[C]] =
-    state.actions.filter { a =>
-      (availablePools.isEmpty || availablePools.contains(poolOf(a))) &&
-        a.readiness(state.inputs) == ActionState.ReadyToRun &&
-        tagDepsSatisfied(a)
-    }
+    new ReadyIndex(state).runnable.filter(a =>
+      availablePools.isEmpty || availablePools.contains(poolOf(a)))
 
   // ----------------------------------------------------------- validation ---
 
@@ -215,28 +244,27 @@ trait DataFlow[Self <: DataFlow[Self, C], C <: FlowContext] { self: Self =>
     * tags nobody carries are rejected, (5) no action depends on its own tag,
     * (6) no cycles through label or tag edges. */
   def isValidFlowDAG: Try[Self] = Try {
-    if (state.actions.isEmpty && state.inputs.size == 0)
+    val acts = actions
+    if (acts.isEmpty && state.inputs.size == 0)
       throw new FlowException("Cannot execute an empty flow")
 
-    val produced = state.actions.flatMap(_.outputLabels).toSet
-    val available = produced ++ state.inputs.labels
-    state.actions.foreach { a =>
+    acts.foreach { a =>
       a.inputLabels.foreach { l =>
-        if (!available.contains(l))
+        if (!state.inputs.contains(l) && state.pending.producerOf(l).isEmpty)
           throw new FlowException(
             s"Action [${a.actionName}] requires input label [$l] that no input or action provides")
       }
     }
 
-    val inputClash = produced.intersect(state.inputs.labels)
+    val inputClash = acts.flatMap(_.outputLabels).filter(state.inputs.contains).distinct
     if (inputClash.nonEmpty)
       throw new FlowException(
-        s"Labels defined both as flow inputs and action outputs: ${inputClash.toSeq.sorted.mkString(", ")}")
+        s"Labels defined both as flow inputs and action outputs: ${inputClash.sorted.mkString(", ")}")
 
-    val allTags = state.actions.flatMap(a => state.tagState.forAction(a.guid).tags).toSet
-    state.actions.foreach { a =>
+    val carriers = tagCarriers(acts)
+    acts.foreach { a =>
       val meta = state.tagState.forAction(a.guid)
-      val dangling = meta.dependsOnTags.diff(allTags)
+      val dangling = meta.dependsOnTags.filterNot(carriers.contains)
       if (dangling.nonEmpty)
         throw new FlowException(
           s"Action [${a.actionName}] depends on tags carried by no action: ${dangling.toSeq.sorted.mkString(", ")}")
@@ -246,49 +274,43 @@ trait DataFlow[Self <: DataFlow[Self, C], C <: FlowContext] { self: Self =>
           s"Action [${a.actionName}] both carries and depends on tags: ${selfDep.toSeq.sorted.mkString(", ")}")
     }
 
-    detectCycle()
+    detectCycle(acts, carriers)
     self
   }
 
+  /** Tag → the actions carrying it, in flow order. */
+  private def tagCarriers(acts: Seq[FlowAction[C]]): Map[String, Seq[FlowAction[C]]] =
+    acts.flatMap(a => state.tagState.forAction(a.guid).tags.map(_ -> a)).groupMap(_._1)(_._2)
+
   /** DFS cycle detection over the union of label edges (producer → consumer)
     * and tag edges (tagged → dependent). */
-  private def detectCycle(): Unit = {
-    val producerOf: Map[String, String] =
-      state.actions.flatMap(a => a.outputLabels.map(_ -> a.guid)).toMap
-    val byGuid = state.actions.map(a => a.guid -> a).toMap
-
-    def edgesOf(guid: String): Seq[String] = {
-      val a = byGuid(guid)
-      val labelEdges = a.inputLabels.flatMap(producerOf.get)
-      val meta = state.tagState.forAction(guid)
-      val tagEdges =
-        if (meta.dependsOnTags.isEmpty) Seq.empty
-        else state.actions.collect {
-          case other if other.guid != guid &&
-            state.tagState.forAction(other.guid).tags.intersect(meta.dependsOnTags).nonEmpty =>
-            other.guid
-        }
-      (labelEdges ++ tagEdges).distinct
+  private def detectCycle(acts: Seq[FlowAction[C]],
+      carriers: Map[String, Seq[FlowAction[C]]]): Unit = {
+    def edgesOf(a: FlowAction[C]): Seq[FlowAction[C]] = {
+      val labelEdges = a.inputLabels.flatMap(state.pending.producerOf)
+      val tagEdges = state.tagState.forAction(a.guid).dependsOnTags.toSeq
+        .flatMap(t => carriers.getOrElse(t, Nil)).filter(_.guid != a.guid)
+      (labelEdges ++ tagEdges).distinctBy(_.guid)
     }
 
     val WHITE = 0; val GREY = 1; val BLACK = 2
-    val color = scala.collection.mutable.Map(byGuid.keys.map(_ -> WHITE).toSeq: _*)
+    val color = scala.collection.mutable.Map(acts.map(_.guid -> WHITE): _*)
 
-    def visit(guid: String, path: List[String]): Unit = {
-      color(guid) = GREY
-      edgesOf(guid).foreach { dep =>
-        color(dep) match {
-          case WHITE => visit(dep, guid :: path)
+    def visit(a: FlowAction[C], path: List[FlowAction[C]]): Unit = {
+      color(a.guid) = GREY
+      edgesOf(a).foreach { dep =>
+        color(dep.guid) match {
+          case WHITE => visit(dep, a :: path)
           case GREY =>
-            val names = (dep :: guid :: path).reverse.map(g => byGuid(g).actionName)
+            val names = (dep :: a :: path).reverse.map(_.actionName)
             throw new FlowException(s"Cycle detected in flow DAG: ${names.mkString(" -> ")}")
           case _ => ()
         }
       }
-      color(guid) = BLACK
+      color(a.guid) = BLACK
     }
 
-    byGuid.keys.foreach(g => if (color(g) == WHITE) visit(g, Nil))
+    acts.foreach(a => if (color(a.guid) == WHITE) visit(a, Nil))
   }
 }
 

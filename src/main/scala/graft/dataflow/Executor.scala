@@ -37,6 +37,19 @@ trait FlowExecutor[C <: FlowContext] {
   def execute[S <: DataFlow[S, C]](flow: S, errorOnUnexecutedActions: Boolean = true): (Seq[FlowAction[C]], S)
 }
 
+object FlowExecutor {
+  /** Rejects leftover actions (when asked to) and finalises the flow. */
+  private[dataflow] def finish[S <: DataFlow[S, C], C <: FlowContext](flow: S,
+      errorOnUnexecutedActions: Boolean): (Seq[FlowAction[C]], S) = {
+    if (errorOnUnexecutedActions && !flow.state.pending.isEmpty)
+      throw new FlowException(
+        s"Flow finished with ${flow.state.pending.size} unexecuted actions: " +
+          flow.actions.map(_.description).mkString("; "))
+    val finalized = flow.finaliseExecution().get
+    (finalized.state.executedActions, finalized)
+  }
+}
+
 /** Single-threaded executor: run one ready action at a time, in priority
   * order. Reference: SequentialScheduler.scala:14-46. */
 class SequentialExecutor[C <: FlowContext](
@@ -44,30 +57,24 @@ class SequentialExecutor[C <: FlowContext](
   extends FlowExecutor[C] {
 
   def execute[S <: DataFlow[S, C]](flow: S, errorOnUnexecutedActions: Boolean = true): (Seq[FlowAction[C]], S) = {
-    val prepared = flow.prepareForExecution().get
-    var current = prepared
-    var progressed = true
-    while (progressed && current.actions.nonEmpty) {
-      priority(current.nextRunnable()).headOption match {
-        case None => progressed = false
-        case Some(action) =>
-          val inputs = current.inputs.filterLabels(action.inputLabels)
-          current.context.reportActionStarted(action)
-          action.performAction(inputs, current.context) match {
-            case Success(outputs) =>
-              current.context.reportActionFinished(action)
-              current = current.executed(action, outputs)
-            case Failure(e) =>
-              throw new FlowException(s"Action [${action.description}] failed", e)
-          }
+    var current = flow.prepareForExecution().get
+    val index = new ReadyIndex(current.state)
+    var next = priority(index.runnable).headOption
+    while (next.nonEmpty) {
+      val action = next.get
+      val inputs = current.inputs.filterLabels(action.inputLabels)
+      current.context.reportActionStarted(action)
+      action.performAction(inputs, current.context) match {
+        case Success(outputs) =>
+          current.context.reportActionFinished(action)
+          current = current.executed(action, outputs)
+          index.executed(action, outputs)
+        case Failure(e) =>
+          throw new FlowException(s"Action [${action.description}] failed", e)
       }
+      next = priority(index.runnable).headOption
     }
-    if (errorOnUnexecutedActions && current.actions.nonEmpty)
-      throw new FlowException(
-        s"Flow finished with ${current.actions.size} unexecuted actions: " +
-          current.actions.map(_.description).mkString("; "))
-    val finalized = current.finaliseExecution().get
-    (finalized.state.executedActions, finalized)
+    FlowExecutor.finish(current, errorOnUnexecutedActions)
   }
 }
 
@@ -89,12 +96,12 @@ class ParallelExecutor[C <: FlowContext](
   private final case class Done(action: FlowAction[C], result: Try[core.ActionResult])
 
   def execute[S <: DataFlow[S, C]](flow: S, errorOnUnexecutedActions: Boolean = true): (Seq[FlowAction[C]], S) = {
-    val prepared = flow.prepareForExecution().get
+    var current = flow.prepareForExecution().get
+    val index = new ReadyIndex(current.state)
     val queue = new LinkedBlockingQueue[Done]()
     val pools = new ConcurrentHashMap[String, java.util.concurrent.ExecutorService]()
     val runningPerPool = mutable.Map[String, Int]().withDefaultValue(0)
     val running = mutable.Set[String]()
-    var current = prepared
     var failure: Option[Throwable] = None
 
     def poolService(pool: String) = pools.computeIfAbsent(pool, { p =>
@@ -110,31 +117,31 @@ class ParallelExecutor[C <: FlowContext](
       runningPerPool(pool) < poolParallelism.getOrElse(pool, maxParallelActions) &&
         running.size < maxParallelActions
 
-    def scheduleReady(): Unit = {
-      val ready = priority(current.nextRunnable().filterNot(a => running.contains(a.guid)))
-      ready.foreach { action =>
-        val pool = current.poolOf(action)
-        if (failure.isEmpty && slotsLeft(pool)) {
-          running += action.guid
-          runningPerPool(pool) += 1
-          val inputs = current.inputs.filterLabels(action.inputLabels)
-          val ctx = current.context
-          poolService(pool).submit(new Runnable {
-            def run(): Unit = {
-              ctx.setPoolIntoContext(pool)
-              ctx.reportActionStarted(action)
-              // catch Throwable, not just NonFatal: a fatal error (OOM,
-              // StackOverflow) that escaped Try would drop the Done message
-              // and leave the scheduler spinning on `running.nonEmpty` forever
-              val result =
-                try Try(action.performAction(inputs, ctx)).flatten
-                catch { case t: Throwable => Failure(t) }
-              queue.put(Done(action, result))
-            }
-          })
+    def scheduleReady(): Unit =
+      if (failure.isEmpty && running.size < maxParallelActions)
+        priority(index.runnable).foreach { action =>
+          val pool = current.poolOf(action)
+          if (slotsLeft(pool)) {
+            index.started(action)
+            running += action.guid
+            runningPerPool(pool) += 1
+            val inputs = current.inputs.filterLabels(action.inputLabels)
+            val ctx = current.context
+            poolService(pool).submit(new Runnable {
+              def run(): Unit = {
+                ctx.setPoolIntoContext(pool)
+                ctx.reportActionStarted(action)
+                // catch Throwable, not just NonFatal: a fatal error (OOM,
+                // StackOverflow) that escaped Try would drop the Done message
+                // and leave the scheduler spinning on `running.nonEmpty` forever
+                val result =
+                  try Try(action.performAction(inputs, ctx)).flatten
+                  catch { case t: Throwable => Failure(t) }
+                queue.put(Done(action, result))
+              }
+            })
+          }
         }
-      }
-    }
 
     try {
       scheduleReady()
@@ -149,6 +156,7 @@ class ParallelExecutor[C <: FlowContext](
               // `executed` (and its temp-view hook) runs on this scheduler
               // thread — never concurrently — so flow state stays consistent.
               current = current.executed(done.action, outputs)
+              index.executed(done.action, outputs)
               scheduleReady()
             case Failure(e) if failure.isEmpty =>
               failure = Some(new FlowException(s"Action [${done.action.description}] failed", e))
@@ -161,11 +169,6 @@ class ParallelExecutor[C <: FlowContext](
     }
 
     failure.foreach(throw _)
-    if (errorOnUnexecutedActions && current.actions.nonEmpty)
-      throw new FlowException(
-        s"Flow finished with ${current.actions.size} unexecuted actions: " +
-          current.actions.map(_.description).mkString("; "))
-    val finalized = current.finaliseExecution().get
-    (finalized.state.executedActions, finalized)
+    FlowExecutor.finish(current, errorOnUnexecutedActions)
   }
 }

@@ -107,14 +107,14 @@ final case class SparkDataFlow(
   /** Merge two flows built on the same session: union of inputs, actions,
     * tags, pools and sql tables. */
   def ++(other: SparkDataFlow): SparkDataFlow = {
-    val dupLabels = state.actions.flatMap(_.outputLabels)
-      .intersect(other.state.actions.flatMap(_.outputLabels))
+    val dupLabels = other.actions.flatMap(_.outputLabels)
+      .filter(state.pending.producerOf(_).isDefined)
     if (dupLabels.nonEmpty)
       throw new FlowException(s"Cannot merge flows producing the same labels: ${dupLabels.mkString(", ")}")
     copy(
       state = FlowState(
         inputs = state.inputs ++ other.state.inputs,
-        actions = state.actions ++ other.state.actions,
+        pending = state.pending ++ other.state.pending,
         tagState = TagState(
           activeTags = Set.empty,
           activeDependsOnTags = Set.empty,
